@@ -18,6 +18,7 @@ North-rule requirement: "resumable from checkpoint with per-partition lineage
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -51,13 +52,25 @@ def input_fingerprint(df: DataFrame) -> str | None:
     O(files) metadata storm at 10^12-document scale for marginal extra
     discrimination -- an in-place rewrite of the same file names is not a
     supported input mutation."""
-    import hashlib
-
     files = df.inputFiles()
     if not files:
         return None
-    digest = hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()
-    return f"files:{len(files)}:{digest}"
+    return f"files:{len(files)}:{_listing_md5(files)}"
+
+
+def _listing_md5(names) -> str:
+    """md5 hex of the sorted names joined by newlines: the listing part of
+    every input fingerprint.  Persisted in ``_layout.json`` params, so its
+    bytes must never change -- a different digest recomputes every
+    existing output on its next resume."""
+    return hashlib.md5("\n".join(sorted(names)).encode()).hexdigest()
+
+
+def _normalized(params: dict | None) -> dict:
+    """``params`` exactly as a stored marker returns them (tuples ->
+    lists, key order, float round-trip), so comparisons see no spurious
+    difference."""
+    return json.loads(json.dumps(params or {}, sort_keys=True))
 
 
 def md5_bucket_col(n_buckets: int, doc_id_col: str = "doc_id"):
@@ -73,20 +86,6 @@ def md5_bucket_col(n_buckets: int, doc_id_col: str = "doc_id"):
     ).cast("int")
 
 
-def completed_buckets(output_path: str) -> set[int]:
-    lineage_path = os.path.join(output_path, LINEAGE_DIR)
-    if not os.path.isdir(lineage_path):
-        return set()
-    done = set()
-    for name in os.listdir(lineage_path):
-        if name.startswith("bucket=") and name.endswith(".json"):
-            try:
-                done.add(int(name[len("bucket=") : -len(".json")]))
-            except ValueError:
-                continue
-    return done
-
-
 def _is_local_path(path: str) -> bool:
     return "://" not in path or path.startswith("file:")
 
@@ -98,19 +97,23 @@ def _hadoop_fs(spark, path_str: str):
     return fs, path, jvm
 
 
-def completed_buckets_fs(spark, output_path: str) -> set[int]:
-    """completed_buckets over any Hadoop-compatible filesystem (hdfs://,
-    s3a://, gs://, ...) via the JVM FileSystem API; local paths use the
-    cheaper os.listdir."""
-    if _is_local_path(output_path):
-        return completed_buckets(output_path.removeprefix("file:"))
-    fs, _, jvm = _hadoop_fs(spark, output_path)
-    lineage = jvm.org.apache.hadoop.fs.Path(output_path + "/" + LINEAGE_DIR)
-    if not fs.exists(lineage):
-        return set()
+def completed_buckets(output_path: str, spark=None) -> set[int]:
+    """Buckets with a committed ``bucket=N.json`` manifest.  Local paths
+    (or no ``spark``) use the cheaper os.listdir; anything else goes
+    through the JVM FileSystem API (hdfs://, s3a://, gs://, ...)."""
+    if spark is None or _is_local_path(output_path):
+        lineage_path = os.path.join(output_path.removeprefix("file:"), LINEAGE_DIR)
+        names = os.listdir(lineage_path) if os.path.isdir(lineage_path) else []
+    else:
+        fs, _, jvm = _hadoop_fs(spark, output_path)
+        lineage = jvm.org.apache.hadoop.fs.Path(f"{output_path}/{LINEAGE_DIR}")
+        names = (
+            [status.getPath().getName() for status in fs.listStatus(lineage)]
+            if fs.exists(lineage)
+            else []
+        )
     done = set()
-    for status in fs.listStatus(lineage):
-        name = status.getPath().getName()
+    for name in names:
         if name.startswith("bucket=") and name.endswith(".json"):
             try:
                 done.add(int(name[len("bucket=") : -len(".json")]))
@@ -219,6 +222,13 @@ def delete_dir(spark, path: str) -> None:
 
 STAGE_MARKER = "_stage.json"
 LAYOUT_MARKER = "_layout.json"
+STAGES_DIR = "_stages"
+
+
+def stage_path(output_path: str, stage: str) -> str:
+    """Where a curation job commits ``stage``: the ``final`` survivors at
+    the output root, every other stage under ``<output>/_stages/<stage>/``."""
+    return output_path if stage == "final" else os.path.join(output_path, STAGES_DIR, stage)
 
 
 def resolve_bucket_layout(
@@ -241,20 +251,18 @@ def resolve_bucket_layout(
     manifests present with NO layout marker at all (a pre-layout-marker
     legacy dir whose bucketing we cannot verify)."""
     layout = read_marker(output_path, LAYOUT_MARKER, spark=spark)
-    # normalize through json so the comparison sees exactly what a stored
-    # marker would return (tuples -> lists, key order, float round-trip)
-    params = json.loads(json.dumps(params or {}, sort_keys=True))
+    params = _normalized(params)
     if layout is None:
         # manifests without a layout marker: unknowable provenance -- the
         # one-time recompute beats trusting a possibly-mismatched layout
-        stale = bool(completed_buckets_fs(spark, output_path))
+        stale = bool(completed_buckets(output_path, spark=spark))
     else:
         stale = layout.get("n_buckets") != n_buckets or layout.get("params", {}) != params
     if not resume or stale:
         clean_bucketed_output(spark, output_path)
         done: set[int] = set()
     else:
-        done = completed_buckets_fs(spark, output_path)
+        done = completed_buckets(output_path, spark=spark)
     if layout is None or stale or not resume:
         write_marker(
             output_path, LAYOUT_MARKER,
@@ -262,6 +270,78 @@ def resolve_bucket_layout(
             spark=spark,
         )
     return done
+
+
+def _pending(df: DataFrame, done: set[int]) -> DataFrame:
+    """``df`` without the rows of already-committed buckets."""
+    return df.filter(~F.col("bucket").isin(list(done))) if done else df
+
+
+def _commit_buckets(
+    spark,
+    todo: DataFrame,
+    output_path: str,
+    n_buckets: int,
+    done: set[int],
+    aggs,
+    stats_first: bool = False,
+) -> list[dict]:
+    """The bucket commit every bucketed output goes through.
+
+    ``todo`` carries a ``bucket`` column and already leaves out the
+    ``done`` buckets.  It is persisted once, so the write and the
+    per-bucket ``aggs`` collect share one evaluation (no read-back of the
+    just-committed parquet, which at fleet scale is a second full pass;
+    blocks an executor loses are recomputed deterministically, so the
+    manifests still describe exactly the committed rows).  The write uses
+    dynamic partition overwrite as a per-WRITE option, not session conf:
+    replaying a bucket replaces only its partition, and the caller's
+    session overwrite semantics stay untouched.
+
+    The write runs first by default: it fills the cache inside its own
+    job, where a collect first would pay a separate cache-materializing
+    job.  ``stats_first`` is for frames that read files under
+    ``output_path``: a write drops every cached frame reading under its
+    path, so collecting after it would evaluate ``todo`` a second time.
+
+    Then every processed bucket -- each one outside ``done`` -- commits a
+    manifest, zero-valued when it produced no rows (no ids hash to it, or
+    all its input was empty or damaged).  Without one a later resume would
+    recompute it forever.  Marking a no-input bucket done never hides
+    future work: the input fingerprint in the layout params forces a
+    clean recompute if the input changes.
+
+    Returns the processed buckets' manifests, in bucket order."""
+    from pyspark import StorageLevel
+
+    todo = todo.persist(StorageLevel.MEMORY_AND_DISK)
+    per_bucket = todo.groupBy("bucket").agg(*aggs)
+    writer = (
+        todo.write.option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .mode("overwrite")
+    )
+    try:
+        if stats_first:
+            rows = per_bucket.collect()
+            writer.parquet(output_path)
+        else:
+            writer.parquet(output_path)
+            rows = per_bucket.collect()
+    finally:
+        todo.unpersist()
+    found = {int(r["bucket"]): r.asDict() for r in rows}
+    zero = {
+        f.name: 0.0 if f.dataType.typeName() in ("double", "float") else 0
+        for f in per_bucket.schema.fields
+    }
+    manifests = []
+    for b in sorted(set(range(n_buckets)) - {int(d) for d in done}):
+        payload = found.get(b) or {**zero, "bucket": b}
+        payload["committed_at"] = time.time()
+        _write_manifest(output_path, b, payload, spark=spark)
+        manifests.append(payload)
+    return manifests
 
 
 def commit_bucketed_stage(
@@ -276,19 +356,17 @@ def commit_bucketed_stage(
     rows_stat_key: str | None = None,
     params: dict | None = None,
 ) -> int:
-    """The bucket-commit protocol shared by the extraction job and the
-    curation job's stage checkpoints: write ``df`` partitioned by the
-    deterministic id bucket with one manifest per bucket, then commit an
-    atomic stage marker (stats + total rows + schema) LAST, so a marker's
+    """A curation stage checkpoint: write ``df`` partitioned by the
+    deterministic id bucket with one manifest per bucket (the same commit
+    as the extraction, ingestion and planning jobs), then commit an atomic
+    stage marker (stats + total rows + schema) LAST, so a marker's
     existence proves the whole stage.
 
     Buckets whose manifest already exists are SKIPPED (their partition is
-    already committed; the write is idempotent via per-write dynamic
-    partition overwrite -- the writer OPTION, not the session conf, so the
-    caller's session semantics are untouched).  ``resume=False``, or an
-    existing marker whose ``n_buckets`` differs from the request, first
-    CLEANS the stage's data+lineage: stale partitions from a previous
-    layout must not survive into the re-read.
+    already committed).  ``resume=False``, or an existing layout whose
+    ``n_buckets`` differs from the request, first CLEANS the stage's
+    data+lineage: stale partitions from a previous layout must not survive
+    into the re-read.
 
     ``params`` fingerprints the computation that produced ``df`` (see
     :func:`resolve_bucket_layout`): a resume under different params cleans
@@ -297,31 +375,14 @@ def commit_bucketed_stage(
 
     Returns the stage's total row count (pre-existing + new buckets)."""
     done = resolve_bucket_layout(spark, stage_out, n_buckets, resume, params=params)
-    bucketed = df.withColumn("bucket", bucket_col(n_buckets, id_col))
-    todo = bucketed.filter(~F.col("bucket").isin(list(done))) if done else bucketed
-
-    from pyspark import StorageLevel
-
-    todo = todo.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        rows = [
-            r.asDict()
-            for r in todo.groupBy("bucket")
-            .agg(F.count("*").cast("bigint").alias("docs"))
-            .collect()
-        ]
-        (
-            todo.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(stage_out)
-        )
-        for r in rows:
-            r["committed_at"] = time.time()
-            write_marker(stage_out, f"bucket={int(r['bucket'])}.json", r, spark=spark)
-    finally:
-        todo.unpersist()
-    total = sum(r["docs"] for r in rows) + sum(
+    todo = _pending(df.withColumn("bucket", bucket_col(n_buckets, id_col)), done)
+    # stats first: a stage frame may read committed stages nested under
+    # stage_out (the curation jobs' final stage reads <out>/_stages/)
+    manifests = _commit_buckets(
+        spark, todo, stage_out, n_buckets, done,
+        [F.count("*").cast("bigint").alias("docs")], stats_first=True,
+    )
+    total = sum(m["docs"] for m in manifests) + sum(
         (read_marker(stage_out, f"bucket={b}.json", spark=spark) or {}).get("docs", 0)
         for b in done
     )
@@ -335,7 +396,7 @@ def commit_bucketed_stage(
             "stage": stage,
             "rows": int(total),
             "n_buckets": n_buckets,
-            "params": json.loads(json.dumps(params or {}, sort_keys=True)),
+            "params": _normalized(params),
             "schema_json": df.schema.json(),
             "stats": stage_stats,
             "committed_at": time.time(),
@@ -361,14 +422,90 @@ def read_bucketed_stage(
         return None
     if n_buckets is not None and marker.get("n_buckets") != n_buckets:
         return None
-    if params is not None:
-        want = json.loads(json.dumps(params, sort_keys=True))
-        if marker.get("params", {}) != want:
-            return None
+    if params is not None and marker.get("params", {}) != _normalized(params):
+        return None
     if marker["rows"] == 0:
         schema = StructType.fromJson(json.loads(marker["schema_json"]))
         return spark.createDataFrame([], schema), marker["stats"]
     return spark.read.parquet(stage_out).drop("bucket"), marker["stats"]
+
+
+def resumable_stage(
+    spark,
+    stage_out: str,
+    stage: str,
+    n_buckets: int,
+    params: dict,
+    resume: bool,
+    build,
+    id_col: str = "doc_id",
+    rows_stat_key: str | None = None,
+):
+    """Run one checkpointed stage; returns ``(df, stats, resumed)``.
+
+    Under ``resume`` a committed stage (see :func:`read_bucketed_stage`)
+    loads as is.  Otherwise ``build()`` returns ``(frame, stats, pinned)``:
+    the frame commits through :func:`commit_bucketed_stage`, the ``pinned``
+    frames (persisted by ``build`` so its stats actions and the commit
+    share one evaluation) are unpersisted, and the committed stage is read
+    back.  Downstream stages therefore always consume committed parquet,
+    never the in-memory plan -- the same lineage a resume sees."""
+    if resume:
+        committed = read_bucketed_stage(spark, stage_out, n_buckets, params)
+        if committed is not None:
+            return (*committed, True)
+    df, stats, pinned = build()
+    commit_bucketed_stage(
+        spark, df, stage_out, stage, n_buckets, stats, resume,
+        id_col=id_col, rows_stat_key=rows_stat_key, params=params,
+    )
+    for frame in pinned:
+        frame.unpersist()
+    return (*read_bucketed_stage(spark, stage_out, n_buckets, params), False)
+
+
+def _file_bucket_col(n_buckets: int):
+    """The bucket of the source file a ``'<file>#<n>'`` doc_id names:
+    deterministic, so it survives the Arrow boundary without widening the
+    kernel IO."""
+    return bucket_col(n_buckets, F.regexp_replace("doc_id", r"#[0-9]+$", ""))
+
+
+def _listing(spark, pattern: str, what: str) -> list[str]:
+    """Sorted paths matching ``pattern`` (driver-small: file names only)."""
+    from .warc import warc_path_table
+
+    listing = sorted(
+        r["path"] for r in warc_path_table(spark, pattern).select("path").collect()
+    )
+    if not listing:
+        raise ValueError(f"no {what} files match {pattern!r}")
+    return listing
+
+
+def _commit_extraction(spark, extracted, output_path, n_buckets, done) -> dict:
+    """Commit an extracted span table (already carrying its output-side
+    ``bucket``); returns the summary keys every extraction run shares."""
+    manifests = _commit_buckets(
+        spark, extracted, output_path, n_buckets, done,
+        [
+            F.count("*").alias("docs"),
+            F.sum(F.col("content_extracted").cast("int")).alias("docs_extracted"),
+            F.sum(F.col("metrics.fallback_rerun").cast("int")).alias("fallback_reruns"),
+            F.sum(F.col("metrics.parse_retried").cast("int")).alias("parse_retries"),
+            F.sum((F.col("metrics.n_candidates") < 0).cast("int")).alias("kernel_failures"),
+            F.sum(F.col("metrics.truncated").cast("int")).alias("docs_truncated"),
+            F.sum("metrics.in_bytes").alias("in_bytes"),
+            F.sum("metrics.ms").alias("kernel_ms"),
+            F.max("metrics.ms").alias("max_doc_ms"),
+        ],
+    )
+    return {
+        "n_buckets": n_buckets,
+        "buckets_skipped": len(done),
+        "buckets_computed": len(manifests),
+        "docs_computed": int(sum(m["docs"] for m in manifests)),
+    }
 
 
 def run_extraction(
@@ -407,79 +544,17 @@ def run_extraction(
         params={"max_doc_bytes": max_doc_bytes, "url_col": url_col,
                 "input": in_fingerprint},
     )
-    df = input_df.withColumn("bucket", bucket_col(n_buckets))
-    todo_df = df.filter(~F.col("bucket").isin(list(done))) if done else df
-
-    extracted = extract(todo_df, url_col=url_col, max_doc_bytes=max_doc_bytes)
+    # the input is filtered by bucket BEFORE the kernel: a filter cannot be
+    # pushed below mapInArrow
+    todo = _pending(input_df.withColumn("bucket", bucket_col(n_buckets)), done)
+    extracted = extract(todo, url_col=url_col, max_doc_bytes=max_doc_bytes)
     # bucket is deterministic from doc_id: recompute on the output side so it
     # survives the mapInPandas schema boundary without widening the kernel IO
-    extracted = extracted.withColumn("bucket", bucket_col(n_buckets))
-
-    # persist the kernel output once: the write below and the per-bucket
-    # manifest aggregation both read it, so the input is scanned ONCE and
-    # the kernel runs ONCE -- no read-back of the just-committed parquet
-    # (which at fleet scale is a second full pass over the output).  If an
-    # executor loses cached blocks Spark recomputes just those partitions
-    # deterministically, so manifests still describe exactly the committed
-    # rows.
-    from pyspark import StorageLevel
-
-    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # dynamic partition overwrite as a per-WRITE option (not session
-        # conf): replaying a bucket replaces only its partition, and the
-        # caller's session overwrite semantics stay untouched
-        (
-            extracted.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(output_path)
-        )
-        stats = _bucket_stats(extracted)
-    finally:
-        extracted.unpersist()
-
-    for row in stats:
-        payload = row.asDict()
-        payload["committed_at"] = time.time()
-        _write_manifest(output_path, int(row["bucket"]), payload, spark=spark)
-    # a bucket that yields ZERO output rows (no docs hash to it, or -- in
-    # the WARC twin -- its files are all non-response/damaged) produces no
-    # stats row; without a manifest every later resume would recompute it
-    # forever.  Every non-skipped bucket IS fully processed this run by
-    # construction (todo = everything outside ``done``), so the processed
-    # set is exact and free -- no second scan of the input.
-    processed = _commit_zero_doc_manifests(
-        spark, output_path, n_buckets, done, stats
+    summary = _commit_extraction(
+        spark, extracted.withColumn("bucket", bucket_col(n_buckets)),
+        output_path, n_buckets, done,
     )
-
-    return {
-        "n_buckets": n_buckets,
-        "buckets_skipped": len(done),
-        "buckets_computed": len(processed),
-        "docs_computed": int(sum(r["docs"] for r in stats)),
-        "wall_ms": (time.perf_counter() - started) * 1000.0,
-    }
-
-
-def _commit_zero_doc_manifests(spark, output_path, n_buckets, done, stats):
-    """Write explicit zero-doc manifests for processed-but-empty buckets
-    and return the processed set (all buckets not skipped via ``done``).
-    Safe for empty-because-no-input buckets too: the input fingerprint in
-    the layout params already forces a clean recompute if the corpus
-    changes, so marking them done never hides future work."""
-    processed = set(range(n_buckets)) - {int(b) for b in done}
-    nonempty = {int(r["bucket"]) for r in stats}
-    for b in sorted(processed - nonempty):
-        _write_manifest(
-            output_path, b,
-            {"bucket": b, "docs": 0, "docs_extracted": 0, "fallback_reruns": 0,
-             "parse_retries": 0, "kernel_failures": 0, "docs_truncated": 0,
-             "in_bytes": 0, "kernel_ms": 0.0, "max_doc_ms": 0.0,
-             "committed_at": time.time()},
-            spark=spark,
-        )
-    return processed
+    return {**summary, "wall_ms": (time.perf_counter() - started) * 1000.0}
 
 
 def run_warc_ingestion(
@@ -502,33 +577,29 @@ def run_warc_ingestion(
     only when every record of its files has been written, so a resumed run
     re-reads exactly the files of the missing buckets -- the atomic retry
     unit a crawl store actually offers (there is no "re-read half a
-    .warc.gz member stream" primitive).  The input fingerprint is the
-    sorted file listing, so pointing the same output at a different crawl
-    slice recomputes instead of trusting stale buckets.
+    .warc.gz member stream" primitive).  Crawl files with zero extractable
+    responses (warcinfo/request-only, damaged) still commit their bucket.
+    The input fingerprint is the sorted file listing, so pointing the same
+    output at a different crawl slice recomputes instead of trusting stale
+    buckets.
 
     Returns the same summary dict shape as :func:`run_extraction`.
     """
-    from .warc import extract_warc_paths, warc_path_table
+    from .warc import extract_warc_paths
 
     started = time.perf_counter()
-    paths = warc_path_table(spark, pattern).select("path")
-    listing = sorted(r["path"] for r in paths.collect())  # driver-small: file names
-    if not listing:
-        raise ValueError(f"no WARC files match {pattern!r}")
-    import hashlib
-
-    fingerprint = "files:%d:%s" % (
-        len(listing), hashlib.md5("\n".join(listing).encode()).hexdigest()
-    )
+    listing = _listing(spark, pattern, "WARC")
     done = resolve_bucket_layout(
         spark, output_path, n_buckets, resume,
-        params={"max_doc_bytes": max_doc_bytes, "input": fingerprint,
+        params={"max_doc_bytes": max_doc_bytes,
+                "input": f"files:{len(listing)}:{_listing_md5(listing)}",
                 "unit": "warc_file"},
     )
-    bucketed = spark.createDataFrame(
-        [(p,) for p in listing], "path string"
-    ).withColumn("bucket", bucket_col(n_buckets, "path"))
-    todo = bucketed.filter(~F.col("bucket").isin(list(done))) if done else bucketed
+    todo = _pending(
+        spark.createDataFrame([(p,) for p in listing], "path string")
+        .withColumn("bucket", bucket_col(n_buckets, "path")),
+        done,
+    )
     # spread FILES across the executor cores (the exchange moves only path
     # strings).  Partitioning need not align with the bucket commit unit:
     # manifests are aggregated from the written rows AFTER the write, so
@@ -538,46 +609,16 @@ def run_warc_ingestion(
     n_part = max(
         1, min(n_todo, max(n_buckets, spark.sparkContext.defaultParallelism))
     )
-    todo = todo.repartition(n_part, "path")
-
-    extracted = extract_warc_paths(todo, max_doc_bytes=max_doc_bytes)
-    # recompute the bucket from the doc_id's path prefix (doc_id is
-    # '<path>#<record idx>'): deterministic, survives the Arrow boundary
-    extracted = extracted.withColumn(
-        "bucket",
-        F.pmod(
-            F.xxhash64(F.regexp_replace("doc_id", r"#[0-9]+$", "")),
-            F.lit(n_buckets),
-        ).cast("int"),
+    extracted = extract_warc_paths(
+        todo.repartition(n_part, "path"), max_doc_bytes=max_doc_bytes
     )
-    from pyspark import StorageLevel
-
-    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        (
-            extracted.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(output_path)
-        )
-        stats = _bucket_stats(extracted)
-    finally:
-        extracted.unpersist()
-    for row in stats:
-        payload = row.asDict()
-        payload["committed_at"] = time.time()
-        _write_manifest(output_path, int(row["bucket"]), payload, spark=spark)
-    # crawl files with zero extractable responses (warcinfo/request-only,
-    # damaged) must still commit their bucket, or resume re-streams them
-    processed = _commit_zero_doc_manifests(
-        spark, output_path, n_buckets, done, stats
+    summary = _commit_extraction(
+        spark, extracted.withColumn("bucket", _file_bucket_col(n_buckets)),
+        output_path, n_buckets, done,
     )
     return {
-        "n_buckets": n_buckets,
+        **summary,
         "n_files": len(listing),
-        "buckets_skipped": len(done),
-        "buckets_computed": len(processed),
-        "docs_computed": int(sum(r["docs"] for r in stats)),
         "wall_ms": (time.perf_counter() - started) * 1000.0,
     }
 
@@ -605,21 +646,15 @@ def run_cdx_ingestion(
     the selection (prefixes, base dir), so changing either recomputes
     instead of trusting stale buckets."""
     from .cdx import cdx_lines, extract_cdx_ranges, plan_fetches
-    from .warc import warc_path_table
 
     started = time.perf_counter()
-    idx_paths = warc_path_table(spark, cdx_pattern).select("path")
-    listing = sorted(r["path"] for r in idx_paths.collect())  # index shard names
-    if not listing:
-        raise ValueError(f"no CDX index files match {cdx_pattern!r}")
+    listing = _listing(spark, cdx_pattern, "CDX index")
     if not urlkey_prefixes:
         raise ValueError("urlkey_prefixes must be non-empty (select something)")
-    import hashlib
-
     fingerprint = "cdx:%d:%s:%s:%s" % (
         len(listing),
-        hashlib.md5("\n".join(listing).encode()).hexdigest(),
-        hashlib.md5("\n".join(sorted(urlkey_prefixes)).encode()).hexdigest(),
+        _listing_md5(listing),
+        _listing_md5(urlkey_prefixes),
         warc_base_dir or "",
     )
     done = resolve_bucket_layout(
@@ -629,10 +664,7 @@ def run_cdx_ingestion(
     )
     lines = spark.read.text(listing).withColumnRenamed("value", "line")
     plan = plan_fetches(cdx_lines(lines), urlkey_prefixes)
-    plan = plan.withColumn(
-        "bucket", F.pmod(F.xxhash64("filename"), F.lit(n_buckets)).cast("int")
-    )
-    todo = plan.filter(~F.col("bucket").isin(list(done))) if done else plan
+    todo = _pending(plan.withColumn("bucket", bucket_col(n_buckets, "filename")), done)
     # spread plans across cores; warc_records_from_ranges sorts within
     # partitions so each file still opens once per partition
     todo = todo.drop("bucket").repartition(
@@ -641,40 +673,13 @@ def run_cdx_ingestion(
     extracted = extract_cdx_ranges(
         todo, base_dir=warc_base_dir, max_doc_bytes=max_doc_bytes
     )
-    # bucket from the doc_id's filename prefix ('<filename>#<offset>')
-    extracted = extracted.withColumn(
-        "bucket",
-        F.pmod(
-            F.xxhash64(F.regexp_replace("doc_id", r"#[0-9]+$", "")),
-            F.lit(n_buckets),
-        ).cast("int"),
-    )
-    from pyspark import StorageLevel
-
-    extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        (
-            extracted.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(output_path)
-        )
-        stats = _bucket_stats(extracted)
-    finally:
-        extracted.unpersist()
-    for row in stats:
-        payload = row.asDict()
-        payload["committed_at"] = time.time()
-        _write_manifest(output_path, int(row["bucket"]), payload, spark=spark)
-    processed = _commit_zero_doc_manifests(
-        spark, output_path, n_buckets, done, stats
+    summary = _commit_extraction(
+        spark, extracted.withColumn("bucket", _file_bucket_col(n_buckets)),
+        output_path, n_buckets, done,
     )
     return {
-        "n_buckets": n_buckets,
+        **summary,
         "n_index_files": len(listing),
-        "buckets_skipped": len(done),
-        "buckets_computed": len(processed),
-        "docs_computed": int(sum(r["docs"] for r in stats)),
         "wall_ms": (time.perf_counter() - started) * 1000.0,
     }
 
@@ -718,27 +723,14 @@ def run_crawl_planning(
     from .cdx import cdx_lines, plan_fetches, schedule_frontier
 
     started = time.perf_counter()
-    from .warc import warc_path_table
-
-    idx_paths = warc_path_table(spark, cdx_pattern).select("path")
-    listing = sorted(r["path"] for r in idx_paths.collect())
-    if not listing:
-        raise ValueError(f"no CDX index files match {cdx_pattern!r}")
+    listing = _listing(spark, cdx_pattern, "CDX index")
     if not urlkey_prefixes:
         raise ValueError("urlkey_prefixes must be non-empty (select something)")
-    import hashlib
-
-    sitemap_listing: list[str] = []
-    if sitemap_glob:
-        sitemap_listing = sorted(
-            r["path"] for r in warc_path_table(spark, sitemap_glob).select("path").collect()
-        )
-        if not sitemap_listing:
-            raise ValueError(f"no sitemap files match {sitemap_glob!r}")
+    sitemap_listing = _listing(spark, sitemap_glob, "sitemap") if sitemap_glob else []
     fingerprint = "plan:%s:%s:%s:%d:%d" % (
-        hashlib.md5("\n".join(listing).encode()).hexdigest(),
-        hashlib.md5("\n".join(sorted(urlkey_prefixes)).encode()).hexdigest(),
-        hashlib.md5("\n".join(sitemap_listing).encode()).hexdigest(),
+        _listing_md5(listing),
+        _listing_md5(urlkey_prefixes),
+        _listing_md5(sitemap_listing),
         per_domain_per_slot,
         int(fetch_unmodified_unknown),
     )
@@ -775,70 +767,24 @@ def run_crawl_planning(
         plan = caps
         out_cols = ["urlkey", "timestamp", "url", "filename", "offset", "length"]
     slotted = schedule_frontier(plan, per_domain_per_slot=per_domain_per_slot)
-    slotted = slotted.withColumn(
-        "bucket", F.pmod(F.xxhash64("domain"), F.lit(n_buckets)).cast("int")
-    ).select(*out_cols, "domain", "slot", "bucket")
-    todo = slotted.filter(~F.col("bucket").isin(list(done))) if done else slotted
-
-    from pyspark import StorageLevel
-
-    todo = todo.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        (
-            todo.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(plan_output)
-        )
-        stats = (
-            todo.groupBy("bucket")
-            .agg(
-                F.count("*").alias("urls"),
-                F.countDistinct("domain").alias("domains"),
-                (F.max("slot") + 1).alias("max_slots"),
-            )
-            .collect()
-        )
-    finally:
-        todo.unpersist()
-    for row in stats:
-        payload = row.asDict()
-        payload["committed_at"] = time.time()
-        _write_manifest(plan_output, int(row["bucket"]), payload, spark=spark)
-    processed = set(range(n_buckets)) - {int(b) for b in done}
-    nonempty = {int(r["bucket"]) for r in stats}
-    for b in sorted(processed - nonempty):
-        _write_manifest(
-            plan_output, b,
-            {"bucket": b, "urls": 0, "domains": 0, "max_slots": 0,
-             "committed_at": time.time()},
-            spark=spark,
-        )
+    slotted = slotted.withColumn("bucket", bucket_col(n_buckets, "domain")).select(
+        *out_cols, "domain", "slot", "bucket"
+    )
+    manifests = _commit_buckets(
+        spark, _pending(slotted, done), plan_output, n_buckets, done,
+        [
+            F.count("*").alias("urls"),
+            F.countDistinct("domain").alias("domains"),
+            (F.max("slot") + 1).alias("max_slots"),
+        ],
+    )
     return {
         "mode": "refresh" if sitemap_glob else "archival",
         "n_buckets": n_buckets,
         "n_index_files": len(listing),
         "n_sitemap_files": len(sitemap_listing),
         "buckets_skipped": len(done),
-        "buckets_computed": len(processed),
-        "urls_planned": int(sum(r["urls"] for r in stats)),
+        "buckets_computed": len(manifests),
+        "urls_planned": int(sum(m["urls"] for m in manifests)),
         "wall_ms": (time.perf_counter() - started) * 1000.0,
     }
-
-
-def _bucket_stats(extracted: DataFrame):
-    return (
-        extracted.groupBy("bucket")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(F.col("content_extracted").cast("int")).alias("docs_extracted"),
-            F.sum(F.col("metrics.fallback_rerun").cast("int")).alias("fallback_reruns"),
-            F.sum(F.col("metrics.parse_retried").cast("int")).alias("parse_retries"),
-            F.sum((F.col("metrics.n_candidates") < 0).cast("int")).alias("kernel_failures"),
-            F.sum(F.col("metrics.truncated").cast("int")).alias("docs_truncated"),
-            F.sum("metrics.in_bytes").alias("in_bytes"),
-            F.sum("metrics.ms").alias("kernel_ms"),
-            F.max("metrics.ms").alias("max_doc_ms"),
-        )
-        .collect()
-    )

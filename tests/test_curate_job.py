@@ -22,14 +22,14 @@ def spark():
     s.stop()
 
 
-def test_curate_pipeline_stages(spark):
+def test_curate_pipeline_stages(spark, tmp_path):
     import os
     import sys
 
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
     )
-    from curate import curate
+    from curate import curate_resumable
 
     body = (
         "this article has plenty of decent words, proper length, and it "
@@ -50,9 +50,9 @@ def test_curate_pipeline_stages(spark):
     # line_min_repeats=4: only the banner (present in ALL 4 quality
     # survivors) counts as boilerplate; the trio's shared body segments
     # (3 docs) stay, so the near-dup stage still sees them
-    surviving, stats = curate(
-        docs, min_words=5, minhash_threshold=0.5, line_min_repeats=4,
-        line_delimiter=",",
+    surviving, stats = curate_resumable(
+        spark, docs, str(tmp_path / "out"), min_words=5, minhash_threshold=0.5,
+        line_min_repeats=4, line_delimiter=",",
     )
 
     assert stats["input_docs"] == 6
@@ -68,7 +68,7 @@ def test_curate_pipeline_stages(spark):
     assert stats["emptied_by_line_dedup"] == 0
 
 
-def test_curate_emptied_docs_are_not_cross_clustered(spark):
+def test_curate_emptied_docs_are_not_cross_clustered(spark, tmp_path):
     """Docs fully emptied by boilerplate removal must NOT be treated as
     near-duplicates of each other (all empty texts tokenize identically);
     they bypass the pair graph and survive with the count exposed."""
@@ -78,7 +78,7 @@ def test_curate_emptied_docs_are_not_cross_clustered(spark):
     sys.path.insert(
         0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
     )
-    from curate import curate
+    from curate import curate_resumable
 
     rows = [
         ("a", "SAME BANNER."),
@@ -87,9 +87,9 @@ def test_curate_emptied_docs_are_not_cross_clustered(spark):
         ("d", "a genuinely unique article, with plenty of words, ending properly."),
     ]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
-    surviving, stats = curate(
-        docs, min_words=2, minhash_threshold=0.5, line_min_repeats=3,
-        line_delimiter=",",
+    surviving, stats = curate_resumable(
+        spark, docs, str(tmp_path / "out"), min_words=2, minhash_threshold=0.5,
+        line_min_repeats=3, line_delimiter=",",
     )
     assert stats["emptied_by_line_dedup"] == 3
     assert stats["near_dup_pairs"] == 0  # empties never enter the graph
